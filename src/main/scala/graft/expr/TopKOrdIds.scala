@@ -2,7 +2,7 @@ package graft.expr
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -29,7 +29,8 @@ import org.apache.spark.sql.types._
   * last under asc) — with ties broken by id ascending. Null ord/id rows
   * are ignored (the replaced spellings never produce them: cosine/adc
   * over non-null same-length vectors are non-null; ANSI division turns
-  * the 0/0 case into an error, not a null).
+  * the 0/0 case into an error, not a null). The inputs must already be
+  * (double, bigint): any other type fails analysis (no implicit cast).
   */
 case class TopKOrdIds(
     ord: Expression,
@@ -39,7 +40,7 @@ case class TopKOrdIds(
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[TopKOrdIds.Buf]
-  with BinaryLike[Expression] {
+  with BinaryLike[Expression] with ExpectsInputTypes {
 
   require(k >= 1, s"k=$k must be >= 1")
 
@@ -47,6 +48,8 @@ case class TopKOrdIds(
   override def right: Expression = id
 
   override def prettyName: String = "graft_topk_ord_ids"
+
+  override def inputTypes: Seq[DataType] = Seq(DoubleType, LongType)
 
   override def nullable: Boolean = false
 

@@ -195,10 +195,6 @@ object Dedup {
     * partition. */
   val DefaultRegistryLaneMaxRowsPerFile: Long = 1000000L
 
-  /** Delta-side join shape: broadcast when the sizing decision says the
-    * delta is small (the map-side-streaming plan), shuffled hash join with
-    * the delta as build side otherwise — the strategy flip moves the
-    * exchange, never the rows (spec-pinned). */
   /** Budget probe: decides `count(df) <= budget` as
     * `df.limit(budget + 1).count() <= budget` — the identical predicate
     * (min(count, budget+1) <= budget ⟺ count <= budget, for budget >= 0),
@@ -212,6 +208,10 @@ object Dedup {
     if (budget < 0 || budget >= Int.MaxValue) df.count() <= budget
     else df.limit(budget.toInt + 1).count() <= budget
 
+  /** Delta-side join shape: broadcast when the sizing decision says the
+    * delta is small (the map-side-streaming plan), shuffled hash join with
+    * the delta as build side otherwise — the strategy flip moves the
+    * exchange, never the rows (spec-pinned). */
   private def sized(df: DataFrame, small: Boolean): DataFrame =
     if (small) broadcast(df) else df.hint("shuffle_hash")
 

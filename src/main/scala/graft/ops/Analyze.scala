@@ -187,6 +187,11 @@ object Analyze {
     (picked.size, n)
   }
 
+  /** Row bound of a dimension: the broadcast license of the stats-planned
+    * joins below, and the most rows a serving snapshot
+    * ([[graft.serve.GraftApi]]) holds on the driver. */
+  val DimensionMaxRows: Long = 1000000L
+
   /** The stats mart CONSUMED at plan time — the cost-based decision every
     * warehouse planner makes from exactly this table: join through a
     * broadcast when the dimension's ANALYZE row count is under `maxRows`,
@@ -200,7 +205,7 @@ object Analyze {
     * is the same broadcast-vs-shuffle choice over the same catalog read
     * (BroadcastHashJoin LeftAnti vs a shuffled anti). */
   def joinPlannedByStats(fact: DataFrame, dim: DataFrame, stats: DataFrame,
-      keys: Seq[String], maxRows: Long = 1000000L,
+      keys: Seq[String], maxRows: Long = DimensionMaxRows,
       joinType: String = "inner"): DataFrame = {
     // Missing/empty mart (never ANALYZEd, or all-null n_rows) must degrade
     // to the conservative no-hint path, not crash planning: no stats means
@@ -231,7 +236,7 @@ object Analyze {
     * Ties keep declaration order (stable sort), so the plan is
     * deterministic under equal estimates. */
   def multiJoinPlannedByStats(fact: DataFrame, dims: Seq[PlannedDim],
-      maxRows: Long = 1000000L): DataFrame = {
+      maxRows: Long = DimensionMaxRows): DataFrame = {
     val sized = dims.map { d =>
       val n = d.stats.agg(max(col("n_rows")).as("n")).collect()
         .headOption.filterNot(_.isNullAt(0)).map(_.getLong(0))

@@ -1036,11 +1036,6 @@ object Multimodal {
       audioFingerprints(graft.Tables.documents(s, dir)))
   }
 
-  /** Measurement-only access to the audio fingerprint mart (graft.Profile
-    * band-bucket distribution probe — VERDICT r19 item #6). */
-  private[graft] def audioFpMartProbe(s: SparkSession, dir: String)
-      : DataFrame = audioFpMart(s, dir)
-
   /** The verified banded image near-dup pair table at the query family's
     * shared maxHamming=8 — q135 serves it, q140/q143 cluster it. */
   private def imagePairsMart(s: SparkSession, dir: String): DataFrame =

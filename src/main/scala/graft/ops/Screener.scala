@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 
 /** The FastAPI query layer re-expressed as composable Column predicates
@@ -57,11 +58,42 @@ object Screener {
 
   /** Shared projection + multi-key top-k (O2) over the joined frame. */
   private def finishScreen(joined: DataFrame, p: ScreenerParams): DataFrame =
-    joined
-      .select(col("ticker"), col("name"), col("cik"), col("fiscal_year"),
-        col("roe"), col("fcf_margin"), col("net_margin"))
+    ranked(joined).limit(p.limit)
+
+  /** The screener's output columns, in [[ranked]]'s projection order. */
+  val RankedCols: Seq[String] = Seq("ticker", "name", "cik", "fiscal_year",
+    "roe", "fcf_margin", "net_margin")
+
+  /** The screener's projection and total order over a ratios ⋈ companies
+    * frame, without the top-k cut: fiscal_year DESC, roe DESC NULLS LAST,
+    * cik ASC ((cik, fiscal_year) is the ratios key, so ties cannot occur).
+    * The planned tiers cut it at `limit`; the serving snapshot
+    * ([[graft.serve.GraftApi]]) collects it whole and answers with
+    * [[rankedRowFilter]] plus the first `limit` matches, which are the same
+    * rows because filtering a totally ordered list keeps its order. */
+  def ranked(joined: DataFrame): DataFrame =
+    joined.select(RankedCols.map(col): _*)
       .orderBy(col("fiscal_year").desc, col("roe").desc_nulls_last, col("cik").asc)
-      .limit(p.limit)
+
+  /** [[filtered]]'s fold as a driver-side predicate over [[ranked]] rows.
+    * Same semantics as the Column fold: `=` and `>=` reject nulls, and
+    * doubles compare as Catalyst compares them ([[atLeast]]). */
+  def rankedRowFilter(p: ScreenerParams): Row => Boolean = {
+    val Seq(fy, roe, fcf, net) = Seq("fiscal_year", "roe", "fcf_margin",
+      "net_margin").map(RankedCols.indexOf)
+    val tests: Seq[Row => Boolean] = Seq(
+      p.fiscalYear.map(y => (r: Row) => !r.isNullAt(fy) && r.getInt(fy) == y),
+      p.minRoe.map(v => (r: Row) => atLeast(r, roe, v)),
+      p.minFcfMargin.map(v => (r: Row) => atLeast(r, fcf, v)),
+      p.minNetMargin.map(v => (r: Row) => atLeast(r, net, v))).flatten
+    r => tests.forall(_(r))
+  }
+
+  /** `r(i) >= v` as Catalyst evaluates it on a double column: false on
+    * null, and SQLOrderingUtil.compareDoubles' order, in which NaN equals
+    * NaN and sorts above +Infinity, and -0.0 equals 0.0. */
+  def atLeast(r: Row, i: Int, v: Double): Boolean =
+    !r.isNullAt(i) && SQLOrderingUtil.compareDoubles(r.getDouble(i), v) >= 0
 
   /** Typed serving edge: the same screener as a Dataset[ScreenerHit] — what
     * the API layer would serialize to JSON (SecModel.ScreenerHit mirrors the

@@ -67,4 +67,19 @@ class TopKOrdIdsSpec extends SparkSpec {
     val got = kernel(df, 5, desc = true).collect()
     assert(got.length === 1 && got.head.getLong(1) === 10L)
   }
+
+  test("a non-double ord or non-bigint id fails analysis, not the task") {
+    def analyze(ord: org.apache.spark.sql.Column,
+        id: org.apache.spark.sql.Column): Unit =
+      rows.groupBy("query_id")
+        .agg(TopKOrdIds(ord, id, 3, desc = true).as("__top"))
+        .queryExecution.assertAnalyzed()
+    for ((ord, id) <- Seq(
+        (col("ord").cast("float"), col("vec_id")),
+        (col("ord"), col("vec_id").cast("int")))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](analyze(ord, id))
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+    }
+    analyze(col("ord"), col("vec_id")) // (double, bigint) still analyzes
+  }
 }

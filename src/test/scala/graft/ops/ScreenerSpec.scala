@@ -82,4 +82,54 @@ class ScreenerSpec extends SparkSpec {
     val hinted = Screener.screener(ratios, companies, p).collect().toSeq
     assert(viaStats === hinted)
   }
+
+  test("driver-side >= keeps exactly the rows Catalyst's col >= v keeps " +
+      "(NaN, -0.0, null, infinities)") {
+    val xs: Seq[java.lang.Double] = Seq(Double.NaN, -0.0, 0.0, null,
+      Double.PositiveInfinity, Double.NegativeInfinity, 1e300, -1.0)
+      .map(x => x.asInstanceOf[java.lang.Double])
+    // an RDD-backed frame, so the filter runs compiled, as the mart's does
+    val frame = spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        xs.map(org.apache.spark.sql.Row(_)), 2),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("x",
+          org.apache.spark.sql.types.DoubleType))))
+    def bits(rs: Seq[org.apache.spark.sql.Row]): Seq[Long] =
+      rs.map(r => java.lang.Double.doubleToRawLongBits(r.getDouble(0))).sorted
+    val all = frame.collect().toSeq
+    for (v <- Seq(0.0, -0.0, Double.NaN, 1e300)) {
+      val catalyst = frame.filter(col("x") >= v).collect().toSeq
+      val driver = all.filter(Screener.atLeast(_, 0, v))
+      assert(bits(driver) === bits(catalyst), s"v=$v")
+    }
+  }
+
+  test("rankedRowFilter + take(limit) over ranked rows == the planned " +
+      "screener: every filter subset, thresholds on values, NaN, -0.0, " +
+      "nulls") {
+    val r = Seq(
+      ("c1", 2020, Some(0.9), Some(0.2), Some(0.3)),
+      ("c2", 2020, Some(Double.NaN), Some(-0.0), Some(0.9)),
+      ("c3", 2021, None, Some(0.0), None),
+      ("c4", 2021, Some(-0.0), None, Some(Double.NaN)),
+      ("c5", 2020, Some(0.9), Some(0.9), Some(-1.0))
+    ).toDF("cik", "fiscal_year", "roe", "fcf_margin", "net_margin")
+    val dim = (1 to 5).map(i => (s"c$i", s"T$i", s"N$i"))
+      .toDF("cik", "ticker", "name")
+    val ranked = Screener.ranked(r.join(dim, "cik")).collect()
+    val grid = for {
+      year <- Seq(None, Some(2020))
+      roe <- Seq(false, true); fcf <- Seq(false, true); net <- Seq(false, true)
+      t <- if (roe || fcf || net) Seq(-0.0, 0.9, Double.NaN, -1e300)
+           else Seq(0.0)
+    } yield Screener.ScreenerParams(year, Some(t).filter(_ => roe),
+      Some(t).filter(_ => fcf), Some(t).filter(_ => net), limit = 2)
+    for (p <- grid) {
+      val snap = ranked.iterator.filter(Screener.rankedRowFilter(p))
+        .take(p.limit).toSeq
+      assert(snap === Screener.screener(r, dim, p).collect().toSeq,
+        p.toString)
+    }
+  }
 }

@@ -110,6 +110,112 @@ class GraftApiSpec extends SparkSpec {
     assert(get("/screener?min_roe=xyz")._1 === 422)
   }
 
+  // ---------------------------------- mart snapshot: same rows, no Spark job
+
+  private val sf0001 = "/root/testdata/sf0.001"
+  private def fields(n: com.fasterxml.jackson.databind.JsonNode,
+      cols: Seq[String]): Seq[Option[String]] =
+    cols.map(c => Option(n.get(c)).filterNot(_.isNull).map(_.asText()))
+  private def fields(r: org.apache.spark.sql.Row): Seq[Option[String]] =
+    r.toSeq.map(v => Option(v).map(String.valueOf))
+  private def nodes(a: com.fasterxml.jackson.databind.JsonNode) =
+    (0 until a.size()).map(a.get)
+
+  test("GET /screener bodies == Screener.screenerPlanned rows over a " +
+      "parameter grid (every filter subset, null-rejecting thresholds, " +
+      "limits 1 and 200)") {
+    import org.apache.spark.sql.functions.{col, max}
+    val ratios = graft.sec.SecDerive.ratiosV3(spark, sf0001)
+    val companies = graft.sec.SecDerive.companies(spark, sf0001).cache()
+    val stats = graft.sec.SecDerive.companiesStats(spark, sf0001)
+    val ratioParams = Seq("min_roe" -> "roe",
+      "min_fcf_margin" -> "fcf_margin", "min_net_margin" -> "net_margin")
+    // -1e300 is below every value, so a ratio filter rejects exactly the
+    // null ratios. (ScreenerSpec pins thresholds on values, NaN and -0.0.)
+    for ((_, c) <- ratioParams)
+      assert(ratios.filter(col(c).isNull).count() > 0,
+        s"the grid needs null $c values to reject")
+    val year = ratios.agg(max("fiscal_year")).head().getInt(0)
+    val cols = Seq("ticker", "name", "fiscal_year", "roe", "fcf_margin",
+      "net_margin")
+    val names = Seq("year") ++ ratioParams.map(_._1)
+    try for (subset <- names.toSet.subsets(); limit <- Seq(1, 200)) {
+      val on = names.filter(subset).toSet
+      def min(n: String): Option[Double] = Some(-1e300).filter(_ => on(n))
+      val p = graft.ops.Screener.ScreenerParams(
+        fiscalYear = Some(year).filter(_ => on("year")),
+        minRoe = min("min_roe"), minFcfMargin = min("min_fcf_margin"),
+        minNetMargin = min("min_net_margin"), limit = limit)
+      val query = (names.filter(on).map(n =>
+        if (n == "year") s"year=$year" else s"$n=-1e300") :+ s"limit=$limit")
+        .mkString("&")
+      val (code, body) = get(s"/screener?$query")
+      assert(code === 200, query)
+      val want = graft.ops.Screener.screenerPlanned(ratios, companies, stats, p)
+        .select(cols.map(col): _*).collect().toSeq.map(fields)
+      assert(nodes(body.get("results")).map(fields(_, cols)) === want, query)
+    } finally companies.unpersist()
+  }
+
+  test("GET /ratios bodies == the DataFrame read for every ticker, " +
+      "limits 1, 3 and 50") {
+    import org.apache.spark.sql.functions.col
+    val ratios = graft.sec.SecDerive.ratiosV3(spark, sf0001)
+    val cols = Seq("fiscal_year", "gross_margin", "operating_margin",
+      "net_margin", "roa", "roe", "leverage", "fcf_margin", "asset_turnover")
+    val dim = graft.sec.SecDerive.companies(spark, sf0001)
+      .select("cik", "ticker").collect()
+    assert(dim.length > 1)
+    for (c <- dim) {
+      val (cik, ticker) = (c.getString(0), c.getString(1))
+      val all = ratios.filter(col("cik") === cik).select(cols.map(col): _*)
+        .orderBy(col("fiscal_year").desc).limit(50).collect().toSeq
+        .map(fields)
+      for (limit <- Seq(1, 3, 50)) {
+        val (code, body) = get(s"/ratios/$ticker?limit=$limit")
+        assert(code === 200 && body.get("ticker").asText() === ticker)
+        assert(nodes(body.get("years")).map(fields(_, cols)) ===
+          all.take(limit), s"$ticker limit=$limit")
+      }
+    }
+  }
+
+  test("/company, /ratios and /screener run no Spark job per request") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    assert(get("/health")._1 === 200) // server up, snapshot collected
+    val sc = spark.sparkContext
+    val fenceKey = "graft.spec.fence"
+    // jobs are counted between two fence jobs: listener events arrive in
+    // order, so the second fence's start follows every job started before it
+    val fences = new java.util.concurrent.LinkedBlockingQueue[String]
+    val between = new java.util.concurrent.atomic.AtomicInteger
+    @volatile var counting = false
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(fenceKey))) match {
+          case Some(f) => counting = f == "open"; fences.put(f)
+          case None => if (counting) between.incrementAndGet()
+        }
+    }
+    def fence(f: String): Unit = {
+      sc.setLocalProperty(fenceKey, f)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(fenceKey, null)
+      assert(fences.poll(60, java.util.concurrent.TimeUnit.SECONDS) === f)
+    }
+    sc.addSparkListener(l)
+    try {
+      fence("open")
+      val paths = Seq(s"/company/$someTicker", "/company/NOSUCHTICKER",
+        s"/ratios/$someTicker?limit=3", "/ratios/NOSUCHTICKER",
+        "/screener", "/screener?min_roe=0&year=2020&limit=200",
+        "/screener?min_fcf_margin=-1e300&min_net_margin=0.01&limit=1")
+      for (_ <- 1 to 5; p <- paths) assert(Set(200, 404)(get(p)._1), p)
+      fence("close")
+    } finally sc.removeSparkListener(l)
+    assert(between.get === 0)
+  }
+
   test("GET /search ranks by BM25 score; empty q is a 422") {
     val (code, body) = get("/search?q=hash+join&limit=5")
     assert(code === 200)

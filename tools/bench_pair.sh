@@ -8,6 +8,7 @@
 # 1-minute loadavg to drop below 0.2 returned it to trend.
 #
 # Usage: tools/bench_pair.sh [sf01_dir] [sf1_dir] [out_prefix]
+# Spark threads: $SPARK_GRAFT_CPUS, default nproc.
 # Writes <prefix>_sf01.json and <prefix>_sf1.json (copies of
 # bench_out.json after each leg). Compile first: sbt compile.
 set -euo pipefail
@@ -40,7 +41,7 @@ wait_quiet() {
 
 leg() { # $1 = sf dir, $2 = output json
   wait_quiet
-  SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
     java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
       -Xmx"${SPARK_DRIVER_MEM:-8g}" -XX:ReservedCodeCacheSize=1g \
       -cp "$CP" graft.Bench
