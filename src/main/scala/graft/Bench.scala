@@ -60,8 +60,8 @@ object Bench {
     // re-deriving per query). Bucketing on the join key makes every
     // facts⋈filings exchange-free; opt out with SPARK_GRAFT_BUCKETED=0.
     if (sys.env.getOrElse("SPARK_GRAFT_BUCKETED", "1") != "0")
-      graft.sec.SecDerive.installBucketed(spark, sfDir,
-        java.nio.file.Files.createTempDirectory("graft_bkt").toString)
+      graft.sec.SecDerive.storedLayout(spark, sfDir, "bucketed")(
+        graft.sec.SecDerive.installBucketed(spark, sfDir, _))
     graft.sec.SecDerive.facts(spark, sfDir).count()
     graft.sec.SecDerive.filings(spark, sfDir).count()
     // The derived marts are stored tables in the reference (consumers read

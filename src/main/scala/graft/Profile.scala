@@ -62,8 +62,8 @@ object Profile {
       .write.format("noop").mode("overwrite").save()
     if (!sys.env.get("SPARK_GRAFT_PROFILE_NOWARM").contains("1")) {
       if (sys.env.getOrElse("SPARK_GRAFT_BUCKETED", "1") != "0")
-        graft.sec.SecDerive.installBucketed(spark, sfDir,
-          java.nio.file.Files.createTempDirectory("graft_bkt").toString)
+        graft.sec.SecDerive.storedLayout(spark, sfDir, "bucketed")(
+          graft.sec.SecDerive.installBucketed(spark, sfDir, _))
       graft.sec.SecDerive.facts(spark, sfDir).count()
       graft.sec.SecDerive.filings(spark, sfDir).count()
       graft.sec.SecDerive.ratiosV3(spark, sfDir).count()

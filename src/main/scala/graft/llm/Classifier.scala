@@ -95,9 +95,6 @@ object Classifier {
     graft.Tables.spread(docs).select(base ++ ext: _*)
   }
 
-  private[llm] def rawFeatures(docs: DataFrame): DataFrame =
-    rawFeaturesN(docs, NumFeatures)
-
   /** One-row standardization stats over the raw features: per non-bias j,
     * integer-micro (mu_j, sd_j) from decimal-routed Σf and Σf² — the
     * population moments, quantized so both engines land on the same

@@ -292,8 +292,8 @@ object Dedup {
         .select("content_key", "doc_id")
   }
 
-  /** Sized registry-lane delivery: one writer task, files split every
-    * `cap` rows by the writer itself (`maxRecordsPerFile`) — a
+  /** Sized registry-lane delivery: one writer task, files split by the
+    * writer itself (the caller's `maxRecordsPerFile` cap) — a
     * takedown-request-sized lane lands as ONE file (O(1) footer reads
     * for the admission consult's lane count), a whole-source recall as
     * ceil(rows / cap) bounded files. The r20 spelling priced an explicit
@@ -302,7 +302,7 @@ object Dedup {
     * layout (DedupSpec pins both tiers) with neither — the one trade is
     * that the rare giant-recall lane is written by one sequential task
     * instead of `shards` parallel ones, bounded-memory either way. */
-  private def laneSharded(df: DataFrame, cap: Long): DataFrame =
+  private def laneSharded(df: DataFrame): DataFrame =
     df.coalesce(1)
 
   /** One registry-lane table's committed rows, None when the table has
@@ -397,7 +397,7 @@ object Dedup {
     }
     writeIndexDelta(docs, indexPath, phys = -1L, dynamic = false)
     carried.foreach { case (t, rows) =>
-      laneSharded(rows, DefaultRegistryLaneMaxRowsPerFile)
+      laneSharded(rows)
         .withColumn("batch_id",
           lit((RegistryBatch + 1) * graft.ops.Layout.GenStride)) // gen-0
         .write.mode("overwrite")
@@ -704,11 +704,9 @@ object Dedup {
     * (session, dir); shared by q193 and `GET /takedowns`. */
   def registryMart(spark: org.apache.spark.sql.SparkSession,
       dir: String, nearCopyBlock: Boolean = false): String = {
-    val suffix = if (nearCopyBlock) "near_" else ""
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      s"/graft_mhreg_$suffix" + graft.sec.SecDerive.pathKey(dir)
-    graft.sec.SecDerive.cachedCount(spark, dir,
-        s"minhash_registry_$suffix") {
+    val name =
+      if (nearCopyBlock) "minhash_registry_near" else "minhash_registry"
+    graft.sec.SecDerive.storedLayout(spark, dir, name) { base =>
       val docs = graft.Tables.documents(spark, dir)
       val corpus = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
       writeMinhashIndex(corpus, base)
@@ -723,10 +721,18 @@ object Dedup {
         docs.filter(pmod(col("doc_id"), lit(10)) === 0)
           .unionByName(recrawl),
         base, batchId = 0L, threshold = 0.8)
-      1L
     }
-    base
   }
+
+  /** The memoized incremental near-dup root — the corpus
+    * (doc_id % 10 != 0) index, built once per (session, dir); the delta
+    * (doc_id % 10 == 0) is what q182 probes and q184 admits against it. */
+  def minhashIndexMart(spark: org.apache.spark.sql.SparkSession,
+      dir: String): String =
+    graft.sec.SecDerive.storedLayout(spark, dir, "minhash_index") { base =>
+      writeMinhashIndex(graft.Tables.documents(spark, dir)
+        .filter(pmod(col("doc_id"), lit(10)) =!= 0), base)
+    }
 
   /** The memoized admission-demo root — corpus (doc_id % 10 != 0) base
     * build + the delta (doc_id % 10 == 0) admitted as logical batch 0 —
@@ -734,19 +740,14 @@ object Dedup {
     * discipline (its own root: the dedup index lives apart from the
     * text/vector serving root). Shared by q186 and `GET /admissions`. */
   def admissionMart(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      "/graft_mhadmit_" + graft.sec.SecDerive.pathKey(dir)
-    graft.sec.SecDerive.cachedCount(spark, dir, "minhash_admit_log") {
+      dir: String): String =
+    graft.sec.SecDerive.storedLayout(spark, dir, "minhash_admit_log") { base =>
       val docs = graft.Tables.documents(spark, dir)
       writeMinhashIndex(docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), base)
       admitIntoMinhashIndex(spark,
         docs.filter(pmod(col("doc_id"), lit(10)) === 0), base,
         batchId = 0L, threshold = 0.8)
-      1L
     }
-    base
-  }
 
   private def writeIndexDelta(docs: DataFrame, indexPath: String,
       phys: Long, dynamic: Boolean): Unit = {
@@ -1183,7 +1184,7 @@ object Dedup {
       RegistryBatch)
     graft.ops.Layout.clearPhysicalDelivery(spark, indexPath, regPhys)
     def putLane(df: DataFrame, table: String): Unit =
-      laneSharded(df, laneMaxRowsPerFile)
+      laneSharded(df)
         .withColumn("batch_id", lit(regPhys))
         .write.mode("overwrite").partitionBy("batch_id")
         .option("partitionOverwriteMode", "dynamic")

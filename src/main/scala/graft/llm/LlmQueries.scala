@@ -743,19 +743,10 @@ ORDER BY doc_id_a, doc_id_b""")),
     // to cross (old × new) pairs: probe == one-shot is the exactness law
     // (a doc's bands/shingles depend only on its own text).
     Q("q182_neardup_incremental",
-      (s, dir) => {
-        val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-          "/graft_mhidx_" + graft.sec.SecDerive.pathKey(dir)
-        val docs = Tables.documents(s, dir)
-        graft.sec.SecDerive.cachedCount(s, dir, "minhash_index") {
-          Dedup.writeMinhashIndex(
-            docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), base)
-          1L
-        }
-        Dedup.probeMinhashIndex(s,
-            docs.filter(pmod(col("doc_id"), lit(10)) === 0), base, 0.8)
-          .orderBy("doc_id_a", "doc_id_b")
-      },
+      (s, dir) => Dedup.probeMinhashIndex(s,
+          Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(10)) === 0),
+          Dedup.minhashIndexMart(s, dir), 0.8)
+        .orderBy("doc_id_a", "doc_id_b"),
       Some(s"""
 WITH $minhashCtes
 SELECT doc_id_a, doc_id_b, jaccard FROM j
@@ -770,18 +761,12 @@ ORDER BY doc_id_a, doc_id_b""")),
     // admit/reject counts are what a crawl-ingest run reports.
     Q("q184_incremental_admission",
       (s, dir) => {
-        val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-          "/graft_mhidx_" + graft.sec.SecDerive.pathKey(dir)
-        val docs = Tables.documents(s, dir)
-        graft.sec.SecDerive.cachedCount(s, dir, "minhash_index") {
-          Dedup.writeMinhashIndex(
-            docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), base)
-          1L
-        }
-        val delta = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
+        val delta = Tables.documents(s, dir)
+          .filter(pmod(col("doc_id"), lit(10)) === 0)
         // O(delta) rejection set: rep-level probe + delta-side expansion
         // only — the admission decision never scans the index's members
-        val dupIds = Dedup.probeMinhashDupDeltaIds(s, delta, base, 0.8)
+        val dupIds = Dedup.probeMinhashDupDeltaIds(s, delta,
+          Dedup.minhashIndexMart(s, dir), 0.8)
         delta.join(broadcast(dupIds), Seq("doc_id"), "left_anti")
           .groupBy("source").agg(count(lit(1)).as("n_admitted"))
           .join(
@@ -856,10 +841,9 @@ GROUP BY source ORDER BY source""")),
     // pins structurally.
     Q("q189_takedown_probe",
       (s, dir) => {
-        val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-          "/graft_mhtd_" + graft.sec.SecDerive.pathKey(dir)
         val docs = Tables.documents(s, dir)
-        graft.sec.SecDerive.cachedCount(s, dir, "minhash_takedown") {
+        val base = graft.sec.SecDerive.storedLayout(s, dir,
+            "minhash_takedown") { base =>
           Dedup.writeMinhashIndex(
             docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), base)
           val victims = docs
@@ -867,7 +851,6 @@ GROUP BY source ORDER BY source""")),
               pmod(col("doc_id"), lit(17)) === 5)
             .select("doc_id").collect().map(_.getLong(0)).toSeq
           Dedup.deleteDocsFromMinhashIndex(s, base, victims)
-          1L
         }
         Dedup.probeMinhashIndex(s,
             docs.filter(pmod(col("doc_id"), lit(10)) === 0), base, 0.8)

@@ -1040,18 +1040,16 @@ c AS (SELECT doc_id, source, t,
   /** Build-once serving indexes for a data dir — the production retrieval
     * layout: BM25 postings bucketed by term ([[graft.ops.Layout
     * .writePostings]]) + its stats tables, and the IVFADC index
-    * ([[writeIvfadcIndex]]) with codes partitioned by cell. Memoized per
-    * (session, dir) through the SecDerive once-marker so a bench/verify run
-    * pays the build exactly once; the files land under the JVM tmpdir keyed
-    * on the sanitized dir path (same discipline as Verify's debug dir). */
+    * ([[writeIvfadcIndex]]) with codes partitioned by cell. A
+    * [[graft.sec.SecDerive.storedLayout]] root, so a bench/verify run pays
+    * the build once per (session, dir) and the files go when the
+    * application ends. */
   private[graft] def retrievalIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      "/graft_ridx_" + graft.sec.SecDerive.pathKey(dir)
-    // nlist resolves BEFORE the once-marker: cachedCount's per-key build
-    // lock must not nest another cachedCount call (embCount) on itself
+    // nlist resolves BEFORE the build: cachedCount's per-key build lock
+    // must not nest another cachedCount call (embCount) on itself
     val nlist = Similarity.adaptiveNlist(embCount(s, dir))
-    graft.sec.SecDerive.cachedCount(s, dir, "retrieval_index") {
+    graft.sec.SecDerive.storedLayout(s, dir, "retrieval_index") { base =>
       writeBm25Index(Tables.documents(s, dir), base)
       writeIvfadcIndex(Tables.embeddings(s, dir), nlist, s"$base/ann")
       // the distilled quality model (q126) — train-once at index build,
@@ -1065,9 +1063,7 @@ c AS (SELECT doc_id, source, t,
       // narrow mart instead of the wide vector store
       Similarity.writeJlProjected(Tables.embeddings(s, dir),
         s"$base/jl_projected")
-      1L
     }
-    base
   }
 
   /** One-shot build of the persisted lexical index: term-bucketed postings
@@ -1876,18 +1872,13 @@ keep$r AS (SELECT c.rk, c.pair, c.cnt, c.a, c.b FROM cand$r c
   /** The persisted BPE merge table — [[TextAnalysis.bpeTrainBatched]]'s
     * output written once per (session, dir): the tokenizer artifact an
     * encode-only job ([[TextAnalysis.bpeEncodeWith]]) reads instead of
-    * retraining. Same once-marker discipline as the retrieval index. */
+    * retraining. A stored layout like the retrieval index. */
   private[llm] def bpeMergesMart(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      "/graft_bpe_merges_" + graft.sec.SecDerive.pathKey(dir)
-    graft.sec.SecDerive.cachedCount(s, dir, "bpe_merges") {
+      dir: String): String =
+    graft.sec.SecDerive.storedLayout(s, dir, "bpe_merges") { base =>
       TextAnalysis.bpeTrainBatched(Tables.documents(s, dir))
         .write.mode("overwrite").parquet(base)
-      1L
     }
-    base
-  }
 
   /** The UNBATCHED merge table persisted — q177's train-once vocabulary
     * source: [[TextAnalysis.bpeTrainRounds]]' (round, pair, cnt) lifted
@@ -1897,17 +1888,12 @@ keep$r AS (SELECT c.rk, c.pair, c.cnt, c.a, c.b FROM cand$r c
     * is bit-equality with the inline 3-round train, which only the
     * unbatched winners reproduce. */
   private[llm] def bpeMergesMartUnbatched(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      "/graft_bpe_merges_ub_" + graft.sec.SecDerive.pathKey(dir)
-    graft.sec.SecDerive.cachedCount(s, dir, "bpe_merges_ub") {
+      dir: String): String =
+    graft.sec.SecDerive.storedLayout(s, dir, "bpe_merges_ub") { base =>
       TextAnalysis.bpeTrainRounds(Tables.documents(s, dir))
         .withColumn("rk", lit(1L))
         .write.mode("overwrite").parquet(base)
-      1L
     }
-    base
-  }
 
   /** The q120 oracle: the batched TRAINING chain replayed verbatim (the
     * [[bpeTrainBatchedOracle]] per-round fragments — counts, ranked
@@ -2264,10 +2250,9 @@ FROM embeddings WHERE vec_id < 8 ORDER BY query_id""")),
     // recompute (df, n_docs and avgdl all shift when docs leave).
     Q("q190_takedown_bm25",
       (s, dir) => {
-        val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-          "/graft_bmtd_" + graft.sec.SecDerive.pathKey(dir)
         val docs = Tables.documents(s, dir)
-        graft.sec.SecDerive.cachedCount(s, dir, "bm25_takedown") {
+        val base = graft.sec.SecDerive.storedLayout(s, dir,
+            "bm25_takedown") { base =>
           writeBm25Index(docs.filter(col("doc_id") % 3 === 0), base)
           appendToBm25Index(docs.filter(col("doc_id") % 3 === 1), base,
             batchId = 0L)
@@ -2276,7 +2261,6 @@ FROM embeddings WHERE vec_id < 8 ORDER BY query_id""")),
           val victims = docs.filter(col("doc_id") % 100 === 7)
             .select("doc_id").collect().map(_.getLong(0)).toSeq
           deleteDocsFromBm25Index(s, base, victims)
-          1L
         }
         bm25SearchIndex(s, base, Seq("hash", "join", "window"), topK = 20)
       },

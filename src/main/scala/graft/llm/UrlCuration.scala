@@ -508,9 +508,8 @@ FROM mart GROUP BY domain, host ORDER BY domain, host""")),
     // oracle verbatim: the stats move the exchange, not the rows.
     Q("q185_url_curated_planned",
       (s, dir) => {
-        val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-          "/graft_blocklist_" + graft.sec.SecDerive.pathKey(dir)
-        graft.sec.SecDerive.cachedCount(s, dir, "url_blocklist") {
+        val base = graft.sec.SecDerive.storedLayout(s, dir,
+            "url_blocklist") { base =>
           hostBlocklist(
               hostStats(urlMart(Tables.documents(s, dir)), 1000000L), 300L)
             .write.mode("overwrite").parquet(s"$base/t")

@@ -118,9 +118,8 @@ object Events {
     // the events table minus the victims.
     Q("q194_generic_takedown",
       (s, dir) => {
-        val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-          "/graft_evtd_" + graft.sec.SecDerive.pathKey(dir)
-        graft.sec.SecDerive.cachedCount(s, dir, "events_takedown") {
+        val base = graft.sec.SecDerive.storedLayout(s, dir,
+            "events_takedown") { base =>
           val ev = Tables.events(s, dir)
           Layout.writeEventsByDayCommitted(
             ev.filter(pmod(col("event_id"), lit(3)) =!= 0), base)
@@ -134,7 +133,6 @@ object Events {
             .select("event_id").collect().map(_.getLong(0)).toSeq
           s.sql(s"DELETE FROM LAYOUT '$base' WHERE event_id IN " +
             s"(${victims.mkString(", ")})").collect()
-          1L
         }
         Layout.readDataLayout(s, base)
           .select("event_id", "user_id", "event_type", "value",

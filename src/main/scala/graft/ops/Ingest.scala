@@ -100,22 +100,17 @@ object Ingest {
     * downstream query reads the landing (a pruned columnar scan) instead of
     * re-running nest+flatten per query. The write uses the bounded-document
     * tier (q94's), so the one-time shred itself parallelizes over
-    * cik × years at any corpus size. Build is memoized per (session, dir)
-    * through the SecDerive once-marker (the JsonlLanding.ensure pattern);
+    * cik × years at any corpus size. A [[SecDerive.storedLayout]] root,
+    * built once per (session, dir);
     * at 100 TB this is a catalog table an ingest job maintains, and the
     * amortization is the whole point: the flatten cost moves out of the
     * per-query path. */
   def shreddedLandingPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      "/graft_landing_" + SecDerive.pathKey(dir)
-    SecDerive.cachedCount(s, dir, "shredded_landing") {
+      dir: String): String =
+    SecDerive.storedLayout(s, dir, "shredded_landing") { base =>
       flattenCompanyFacts(nestCompanyFactsBounded(SecDerive.facts(s, dir)))
         .write.mode("overwrite").parquet(base)
-      1L
     }
-    base
-  }
 
   // ---------------------------------------------------------------------------
 

@@ -417,14 +417,6 @@ object Multimodal {
       .toDF()
   }
 
-  /** Audio near-dup pairs through the SAME banded kernel as images — the
-    * modality-generic half of the design made concrete: only the
-    * fingerprint function changed. */
-  def audioNearDupPairs(docs: DataFrame, maxHamming: Int)(
-      implicit spark: SparkSession): DataFrame =
-    bandedPairsFromFeats(audioFingerprints(docs).localCheckpoint(false),
-      maxHamming, prefix = "afp_b")
-
   // ------------------------------------------- persisted aHash near-dup index
 
   /** The index row shape: one row per (image, band) — the hash band is the
@@ -433,10 +425,6 @@ object Multimodal {
     * partition bucket (band value itself is 16-bit — 65k directories per
     * band would drown the filesystem; the bucket bounds directory count
     * with the same pruning effect, the postings `term_bucket` move). */
-  private def ahashBandRows(docs: DataFrame)(
-      implicit spark: SparkSession): DataFrame =
-    ahashBandRowsFromFeats(imageFeatures(docs))
-
   private def ahashBandRowsFromFeats(feats: DataFrame): DataFrame =
     feats
       .select(col("doc_id"), col("ahash_b0"), col("ahash_b1"),
@@ -604,32 +592,15 @@ object Multimodal {
   }
 
   /** Recall audit for the banded tier (the q121 discipline applied to the
-    * image modality): brute all-pairs Hamming vs the banded candidate set,
-    * per distance. The 4×16 banding GUARANTEES recall 1 for Hamming ≤ 3
-    * (pigeonhole: ≤ 3 flipped bits touch ≤ 3 of the 4 bands, so one band
-    * survives intact); 4..maxHamming is probabilistic and this measures
-    * it. ONE decode pass feeds both tiers; the brute side is the audit
-    * tier — at 100 TB it runs on a sample, while the banded side is the
-    * production path. recall_micro is integral division — exact in both
-    * engines. */
-  def imageNearDupRecall(docs: DataFrame, maxHamming: Int)(
-      implicit spark: SparkSession): DataFrame =
-    bandedRecallFromFeats(
-      imageFeatures(docs)
-        .select("doc_id", "ahash_b0", "ahash_b1", "ahash_b2", "ahash_b3")
-        .localCheckpoint(false),
-      maxHamming, prefix = "ahash_b")
-
-  /** The audio tier's recall audit — the same kernel over the PCM
-    * fingerprints (q144), so both modalities carry a measured banding
-    * trade, not just the image one. */
-  def audioNearDupRecall(docs: DataFrame, maxHamming: Int)(
-      implicit spark: SparkSession): DataFrame =
-    bandedRecallFromFeats(audioFingerprints(docs).localCheckpoint(false),
-      maxHamming, prefix = "afp_b")
-
-  /** Brute-vs-banded recall per Hamming distance over any 4×16-bit
-    * fingerprint frame — modality-generic like the pair kernel. */
+    * media modalities, q141 image and q144 audio): brute all-pairs Hamming
+    * vs the banded candidate set, per distance, over any 4×16-bit
+    * fingerprint frame — modality-generic like the pair kernel. The 4×16
+    * banding GUARANTEES recall 1 for Hamming ≤ 3 (pigeonhole: ≤ 3 flipped
+    * bits touch ≤ 3 of the 4 bands, so one band survives intact);
+    * 4..maxHamming is probabilistic and this measures it. ONE decode pass
+    * feeds both tiers; the brute side is the audit tier — at 100 TB it
+    * runs on a sample, while the banded side is the production path.
+    * recall_micro is integral division — exact in both engines. */
   private def bandedRecallFromFeats(feats: DataFrame, maxHamming: Int,
       prefix: String): DataFrame = {
     def ham(x: Column, y: Column): Column = bit_count(x.bitwiseXOR(y))
@@ -1180,9 +1151,8 @@ object Multimodal {
       nearCopyBlock: Boolean = false): String = {
     implicit val sp: SparkSession = s
     val tier = if (nearCopyBlock) "near" else "exact"
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      s"/graft_ahreg_${tier}_" + graft.sec.SecDerive.pathKey(dir)
-    graft.sec.SecDerive.cachedCount(s, dir, s"ahash_registry_$tier") {
+    graft.sec.SecDerive.storedLayout(s, dir,
+        s"ahash_registry_$tier") { base =>
       val docs = Tables.documents(s, dir)
       writeAhashIndex(
         docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), base)
@@ -1197,25 +1167,18 @@ object Multimodal {
             pmod(col("doc_id"), lit(23)) === 7)
           .withColumn("doc_id", col("doc_id") + lit(ImgTwinOffset)))
       appendToAhashIndex(delta, base, 0L)
-      1L
     }
-    base
   }
 
   /** The persisted aHash index for a data dir — built once per
-    * (session, dir), the [[graft.sec.SecDerive.cachedCount]] mart
-    * discipline. The image-modality sibling of the retrieval index root
-    * (kept separate: media stores live apart from the text/vector root,
-    * and `compactSearchRoot`'s sibling contract stays closed). */
-  def ahashIndexMart(spark: SparkSession, dir: String): String = {
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      "/graft_ahash_" + graft.sec.SecDerive.pathKey(dir)
-    graft.sec.SecDerive.cachedCount(spark, dir, "ahash_index") {
+    * (session, dir), a [[graft.sec.SecDerive.storedLayout]] root. The
+    * image-modality sibling of the retrieval index root (kept separate:
+    * media stores live apart from the text/vector root, and
+    * `compactSearchRoot`'s sibling contract stays closed). */
+  def ahashIndexMart(spark: SparkSession, dir: String): String =
+    graft.sec.SecDerive.storedLayout(spark, dir, "ahash_index") { base =>
       writeAhashIndexFromFeats(imageFeatMart(spark, dir), base)(spark)
-      1L
     }
-    base
-  }
 
   // ---------------------------------------------------------------------------
 

@@ -301,19 +301,16 @@ object Zorder {
   private def yCol = datediff(to_date(col("o_orderdate")),
     lit("1990-01-01").cast("date"))
 
-  /** The two layouts under bench tmp, built once per (session, dir). */
-  private def layoutBase(s: SparkSession, dir: String): String = {
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      "/graft_zorder_" + graft.sec.SecDerive.pathKey(dir)
-    graft.sec.SecDerive.cachedCount(s, dir, "zorder_layout") {
+  /** The z-ordered and x-range-ordered layouts of `orders` — one
+    * [[graft.sec.SecDerive.storedLayout]] root, built once per
+    * (session, dir). */
+  private def layoutBase(s: SparkSession, dir: String): String =
+    graft.sec.SecDerive.storedLayout(s, dir, "zorder_layout") { base =>
       val o = graft.Tables.orders(s, dir)
         .select("o_orderkey", "o_custkey", "o_orderdate")
       writeZordered(o, s"$base/z", xCol, yCol, NFiles)
       writeRangeOrdered(o, s"$base/byx", xCol, NFiles)
-      1L
     }
-    base
-  }
 
   val queries: Seq[graft.Q] = Seq(
     // The layout key itself — min/max scaling + the interleave, bit-exact

@@ -45,8 +45,9 @@ object SecDerive {
       scala.collection.mutable.Map[(String, String), DataFrame]]()
   private val hookedContexts = java.util.Collections.newSetFromMap(
     new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Boolean]())
-  private def entriesFor(spark: SparkSession) = {
-    val sc = spark.sparkContext
+  // The same listener deletes the process's stored-layout root
+  // ([[storedLayout]]); callers hold the memo lock.
+  private def hookContextEnd(sc: org.apache.spark.SparkContext): Unit =
     if (hookedContexts.add(sc))
       sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
@@ -56,8 +57,11 @@ object SecDerive {
             memo.keySet.asScala.filter(_.sparkContext eq sc).toList
           }
           mine.foreach(evictMemo)
+          deleteLayouts()
         }
       })
+  private def entriesFor(spark: SparkSession) = {
+    hookContextEnd(spark.sparkContext)
     memo.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
   }
   // private[graft]: the LLM query family memoizes its own derived marts
@@ -123,7 +127,7 @@ object SecDerive {
 
   // Scalar companion to [[cached]]: memoized COUNTS and once-markers
   // (q34/q57/q98/q104 resolve adaptive geometry from the embeddings row
-  // count; the persisted-layout builders use the marker to run exactly
+  // count; [[storedLayout]] uses the marker to build each layout exactly
   // once). Keyed on (session, dir) and cleared by the same [[evictMemo]]
   // path, so a test/bench that regenerates a dir and evicts the session
   // cannot resolve geometry from a stale count (the former JVM-lifetime
@@ -144,9 +148,8 @@ object SecDerive {
   /** Collision-proof filesystem key for a data-dir path: sanitized tail
     * (bounded, so the component stays under filename limits) + an md5
     * suffix of the FULL path (distinct dirs differing only in sanitized-out
-    * characters cannot collide) + the JVM pid (two processes building the
-    * same dir's layout cannot overwrite each other mid-read; within one
-    * process the session memo already dedups builds). */
+    * characters cannot collide) + the JVM pid. Names the [[storedLayout]]
+    * roots and Verify's debug-dump dir. */
   private[graft] def pathKey(dir: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val h = md.digest(dir.getBytes("UTF-8")).take(6)
@@ -155,9 +158,39 @@ object SecDerive {
       "_" + h + "_p" + ProcessHandle.current().pid()
   }
 
+  /** The stored-layout root of (dir, name): the stand-in for a table the
+    * reference keeps in Postgres, which owns its storage and lifetime. It is
+    * `<name>_<pathKey(dir)>` under this process's [[layoutsRoot]], and
+    * `build(root)` writes it once per (session, dir, name) under
+    * [[cachedCount]]'s per-key lock — so `build` must not call cachedCount
+    * itself (resolve such inputs before). [[evictMemo]] keeps the files:
+    * the next call rebuilds in place. The application-end listener deletes
+    * the whole process root. */
+  private[graft] def storedLayout(spark: SparkSession, dir: String,
+      name: String)(build: String => Unit): String = {
+    memo.synchronized(hookContextEnd(spark.sparkContext))
+    val root =
+      new java.io.File(layoutsRoot, s"${name}_${pathKey(dir)}").toString
+    cachedCount(spark, dir, name) { build(root); 1L }
+    root
+  }
+
+  /** One directory per process, so no other process reads or deletes a
+    * layout mid-build. */
+  private[graft] lazy val layoutsRoot: java.io.File = new java.io.File(
+    sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+    s"graft_layouts_p${ProcessHandle.current().pid()}")
+
+  /** The application-end cleanup: removes the process's layout root. */
+  private[graft] def deleteLayouts(): Unit = {
+    org.apache.commons.io.FileUtils.deleteQuietly(layoutsRoot)
+    ()
+  }
+
   /** Drop (and unpersist) this session's memoized derivations — for callers
     * recycling a long-lived session after the inputs change, and for tests
-    * that install/uninstall the bucketed tables. */
+    * that install/uninstall the bucketed tables. Stored layouts stay on
+    * disk; their next use rebuilds them in place. */
   def evictMemo(spark: SparkSession): Unit = memo.synchronized {
     Option(memo.remove(spark)).foreach(_.values.foreach { df =>
       try df.unpersist() catch { case _: Exception => () }

@@ -2,11 +2,13 @@ package graft.sources
 
 import java.io.File
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.SparkSession
+
+import graft.sec.SecDerive
 
 /** Deterministic JSONL landing file for the ticker map, derived from the
   * `companies` dim — the stand-in for the reference's driver-side fetch of
@@ -15,8 +17,9 @@ import org.apache.spark.sql.SparkSession
   * which `graft-jsonl` fans out). Collect is bounded by the dim's size
   * (thousands of tickers at most, by construction of the SEC ticker map).
   *
-  * Written once per (tmpdir, sfDir) via temp-file + atomic move, so
-  * concurrent suites converge on one complete file.
+  * Both landings are [[SecDerive.storedLayout]] roots: written once per
+  * (session, sfDir) under the build lock, private to the process, and
+  * deleted when the application ends.
   */
 object JsonlLanding {
 
@@ -26,67 +29,36 @@ object JsonlLanding {
     * (its inline derivation is the fixture-only fallback). Unlike the
     * ticker landing this is a FACT-scale write, so it stays on the
     * cluster: one `to_json` narrow map into the text sink (no driver
-    * collect), part files renamed to the `.jsonl` source contract, then
-    * one atomic directory move — concurrent builders converge on one
-    * complete landing. The url content here is the deterministic
+    * collect), then part files renamed to the `.jsonl` source contract
+    * (the writer's `_SUCCESS` and checksum files are not `.jsonl`, so the
+    * source never reads them). The url content here is the deterministic
     * derivation (the sandbox has no crawl); in production the same layout
     * lands from the fetcher and NOTHING downstream changes. */
   def ensureCorpusUrls(spark: SparkSession, dir: String): String =
-    synchronized {
-      val key = java.lang.Integer.toHexString(dir.hashCode)
-      val target =
-        Paths.get(sys.props("java.io.tmpdir"), s"graft_corpus_urls_$key")
-      if (!Files.exists(target)) {
-        import org.apache.spark.sql.functions._
-        val tmp = Files.createTempDirectory(
-          target.getParent, "graft_corpus_urls_tmp")
-        val outDir = new File(tmp.toFile, "out")
-        graft.Tables.documents(spark, dir)
-          .select(to_json(struct(
-            col("doc_id").cast("string").as("doc_id"),
-            graft.llm.UrlCuration.deriveUrl(col("doc_id"), col("source"))
-              .as("url"),
-            col("n_chars").cast("string").as("n_chars"))).as("value"))
-          .write.mode("overwrite").text(outDir.toString)
-        val data = new File(tmp.toFile, "data")
-        require(data.mkdirs(), s"cannot create $data")
-        outDir.listFiles()
-          .filter(f => f.isFile && f.getName.startsWith("part-"))
-          .sortBy(_.getName).zipWithIndex
-          .foreach { case (pf, i) =>
-            Files.move(pf.toPath,
-              new File(data, f"part-$i%05d.jsonl").toPath)
-          }
-        try Files.move(data.toPath, target, StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          // another process landed it first — theirs is complete, use it.
-          // An ATOMIC_MOVE of a DIRECTORY onto an existing non-empty target
-          // surfaces as ENOTEMPTY (DirectoryNotEmptyException or a plain
-          // FileSystemException, both FileSystemException subtypes) rather
-          // than FileAlreadyExistsException, so match the supertype and
-          // rethrow only when the target genuinely isn't there — i.e. the
-          // failure wasn't the concurrent-lander case.
-          case e: java.nio.file.FileSystemException =>
-            if (!Files.exists(target)) throw e
+    SecDerive.storedLayout(spark, dir, "corpus_urls") { root =>
+      import org.apache.spark.sql.functions._
+      graft.Tables.documents(spark, dir)
+        .select(to_json(struct(
+          col("doc_id").cast("string").as("doc_id"),
+          graft.llm.UrlCuration.deriveUrl(col("doc_id"), col("source"))
+            .as("url"),
+          col("n_chars").cast("string").as("n_chars"))).as("value"))
+        .write.mode("overwrite").text(root)
+      new File(root).listFiles()
+        .filter(f => f.isFile && f.getName.startsWith("part-"))
+        .sortBy(_.getName).zipWithIndex
+        .foreach { case (pf, i) =>
+          Files.move(pf.toPath, new File(root, f"part-$i%05d.jsonl").toPath)
         }
-        deleteRecursively(tmp.toFile)
-      }
-      target.toString
     }
 
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete()
-    ()
-  }
-
-  def ensure(spark: SparkSession, dir: String): String = synchronized {
-    val key = java.lang.Integer.toHexString(dir.hashCode)
-    val target = Paths.get(sys.props("java.io.tmpdir"), s"graft_tickers_$key.jsonl")
-    if (!Files.exists(target)) {
+  /** The ticker-map landing: one `tickers.jsonl` file in the returned
+    * directory. */
+  def ensure(spark: SparkSession, dir: String): String =
+    SecDerive.storedLayout(spark, dir, "tickers") { root =>
       val mapper = new ObjectMapper
       val maxRows = 1000000 // driver-side fetch: a dim, never a fact table
-      val fetched = graft.sec.SecDerive.companies(spark, dir)
+      val fetched = SecDerive.companies(spark, dir)
         .select("cik", "ticker", "name").limit(maxRows + 1).collect()
       require(fetched.length <= maxRows,
         s"JsonlLanding.ensure collects the companies dim to the driver; " +
@@ -101,11 +73,8 @@ object JsonlLanding {
         node.put("title", r.getString(2))
         sb.append(mapper.writeValueAsString(node)).append('\n')
       }
-      val tmp = Files.createTempFile(target.getParent, "graft_tickers_", ".tmp")
-      Files.write(tmp, sb.toString.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+      Files.createDirectories(Paths.get(root))
+      Files.write(Paths.get(root, "tickers.jsonl"),
+        sb.toString.getBytes(StandardCharsets.UTF_8))
     }
-    target.toString
-  }
 }

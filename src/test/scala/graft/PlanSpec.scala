@@ -291,7 +291,7 @@ class PlanSpec extends SparkSpec {
     // scan of the landing table plus the output sort
     assert(!p.contains("Generate"), s"explode in the amortized path:\n$p")
     assert(!p.contains("collect_list"), s"nesting in the amortized path:\n$p")
-    assert(p.contains("graft_landing_"), s"not reading the landing layout:\n$p")
+    assert(p.contains("/shredded_landing_"), s"not reading the landing layout:\n$p")
   }
 
   test("indexed rrf fusion: postings bucket-pruned + term-pushed, codes cell-pruned, no text scan") {

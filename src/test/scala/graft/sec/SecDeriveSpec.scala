@@ -59,4 +59,33 @@ class SecDeriveSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS graft_filings_bkt")
     }
   }
+
+  private def mkdirLayout(d: String, name: String)(onBuild: => Unit) =
+    SecDerive.storedLayout(spark, d, name) { root =>
+      onBuild
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
+    }
+
+  test("storedLayout: one build per (dir, name), one root per key, rebuilt in place after evictMemo") {
+    var builds = 0
+    val a = mkdirLayout(dir, "spec_layout")(builds += 1)
+    assert(mkdirLayout(dir, "spec_layout")(builds += 1) === a)
+    assert(builds === 1)
+    val others = Seq(mkdirLayout(s"$dir/other", "spec_layout")(()),
+      mkdirLayout(dir, "spec_layout_other")(()))
+    assert((a +: others).distinct.size === 3)
+    assert((a +: others).forall(r =>
+      new java.io.File(r).getParentFile == SecDerive.layoutsRoot))
+    SecDerive.evictMemo(spark)
+    assert(mkdirLayout(dir, "spec_layout")(builds += 1) === a)
+    assert(builds === 2)
+  }
+
+  test("the application-end cleanup removes the process's layout root") {
+    val root = mkdirLayout(dir, "spec_cleanup")(())
+    assert(new java.io.File(root).isDirectory)
+    try SecDerive.deleteLayouts()
+    finally SecDerive.evictMemo(spark) // later suites rebuild what went
+    assert(!SecDerive.layoutsRoot.exists())
+  }
 }
